@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, forcing full materialization through the noop
@@ -82,7 +83,7 @@ object Bench {
   }
 
   val defaultSfDir = "/root/testdata/sf0.1"
-  val defaultCpus = "32"
+  val defaultCpus = Sessions.defaultCpus.toString
 
   /** Artifact path for a run — pure, spec-pinned (VERDICT r14 task 2):
     * a run at a foreign SF *or a foreign core count* with no explicit
@@ -118,12 +119,14 @@ object Bench {
     * (VERDICT r14 what's-wrong 2). A prior with no "cpus" field
     * (pre-r15 artifact) is accepted with a warning — it cannot be
     * distinguished, and rejecting it would let a partial run shrink
-    * the baseline.
+    * the baseline. A real JSON parse, so a pretty-printed prior (the
+    * indented sweep artifacts) reads the same as the one-line form.
     */
   def parsePrior(ref: String, sfDir: String, cpus: String)
       : (Map[String, Double], Seq[String]) = {
-    val priorSf = """"sf":"([^"]*)"""".r.findFirstMatchIn(ref).map(_.group(1))
-    val priorCpus = """"cpus":"?([0-9]+)"?""".r.findFirstMatchIn(ref).map(_.group(1))
+    val root = new ObjectMapper().readTree(ref)
+    def text(k: String) = Option(root.get(k)).map(_.asText)
+    val (priorSf, priorCpus) = (text("sf"), text("cpus"))
     if (priorSf.exists(_ != sfDir))
       (Map.empty, Seq(s"prior artifact measured sf '${priorSf.get}' != " +
         s"current '$sfDir' - ignoring it (no merge, no drift compare); " +
@@ -133,13 +136,9 @@ object Bench {
         s"current $cpus - ignoring it (no merge, no drift compare); " +
         "set SPARK_GRAFT_BENCH_REF to compare across core counts"))
     else {
-      // exponent-aware: a sub-millisecond time serialized as 9.5E-4
-      // must not parse as 9.5 — since the r9 merge a mis-parse would
-      // be written BACK into the artifact as a permanently inflated
-      // drift baseline (values are also written in plain decimal now)
-      val kv = """"([a-z0-9_]+)":([0-9.]+(?:[eE][-+]?[0-9]+)?)""".r
-      val m = kv.findAllMatchIn(ref)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap - "value" - "cpus"
+      val m = root.path("queries").properties().asScala
+        .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }
+        .toMap
       val warn =
         if (priorCpus.isEmpty)
           Seq("prior artifact has no cpus field (pre-r15) - assuming it " +
@@ -151,21 +150,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", defaultSfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val selected =
-      if (args.nonEmpty) SparkEntry.queries.view.filterKeys(args.toSet).toMap
-      else SparkEntry.queries
+    val selected = SparkEntry.select(args.toSeq)
+    val cpus = Sessions.cpus.toString
+    val spark = Sessions.local(appName = "graft-bench")
 
     // JVM/codegen warmup on the smallest SF so per-query numbers measure
     // the plan, not JIT compilation.

@@ -1,16 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: dump `.explain("formatted")` for named queries to files —
   * the optimization-round evidence trail (plans/r15/<query>_before.txt /
-  * _after.txt). Uses the BENCH session config (local[32], 32 shuffle
-  * partitions, 64MB autoBroadcast), and EXECUTES each query before
-  * dumping (ADVICE r14): an unexecuted QueryExecution prints the
-  * static planner output (isFinalPlan=false), while the before/after
-  * evidence the round argues about — AQE partition coalescing,
-  * ReusedExchange, runtime join rewrites — only appears in the final
-  * adaptive plan. Plans captured before r15 are static dumps; compare
+  * _after.txt). Runs under the bench session (Sessions.local), and
+  * EXECUTES each query before dumping (ADVICE r14): an unexecuted
+  * QueryExecution prints the static planner output
+  * (isFinalPlan=false), while the before/after evidence the round
+  * argues about — AQE partition coalescing, ReusedExchange, runtime
+  * join rewrites — only appears in the final adaptive plan. Plans captured before r15 are static dumps; compare
   * like with like.
   *
   * Usage: sbt "runMain graft.Plans <outDir> <suffix> <query> [query...]"
@@ -22,16 +19,7 @@ object Plans {
     val suffix = args(1)
     val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(appName = "graft-plans")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { q =>
       val df = SparkEntry.queries(q)(spark, sfDir)

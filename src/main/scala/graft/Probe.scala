@@ -1,22 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only smoke probe: runs entry() and the capture queries with codegen
   * fallback disabled, proving TryCapture's generated code compiles (no
   * silent interpreted fallback). Usage: sbt "runMain graft.Probe".
   */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(appName = "graft-probe")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     println("ENTRY_ROWS=" + SparkEntry.entry(spark).count())
     val dir = if (args.nonEmpty && !args(0).startsWith("explain:")) args(0)
       else "/root/testdata/sf0.001"

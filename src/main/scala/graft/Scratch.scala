@@ -1,32 +1,21 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
-/** Dev-only scratch instrumentation for the optimization round:
+/** Dev-only per-job profiler for one query under the bench session:
   * per-job wall time + summed task metrics (run/cpu/gc) so driver-side
-  * gaps are distinguishable from executor compute.
+  * gaps are distinguishable from executor compute. Earlier runs warm
+  * the JVM; only the last is printed. SCRATCH_STAGES=1 adds one line
+  * per stage.
+  *
+  * Usage: sbt "runMain graft.Scratch <query> [sfDir] [runs]"
   */
 object Scratch {
   def main(args: Array[String]): Unit = {
     val q = if (args.nonEmpty) args(0) else "t36_quality_ngram"
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
-    val b0 = SparkSession.builder()
-    sys.env.get("SCRATCH_LOCALDIR").foreach(d => b0.config("spark.local.dir", d))
-    val spark = b0
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SCRATCH_PFIRST", "false"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SCRATCH_MINPART", "1MB"))
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(appName = "graft-scratch")
 
     @volatile var record = false
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()

@@ -3812,6 +3812,19 @@ object SparkEntry {
     "t40_trigram_kn" -> (t40 _),
   )
 
+  /** The registry restricted to `ids`, or all of it when `ids` is empty
+    * — the selection every main takes from its arguments. Unknown ids
+    * FAIL: a typo would otherwise select nothing, which reads as a
+    * vacuous green under check.py --partial and as a 0-second total
+    * in Bench.
+    */
+  def select(ids: Seq[String]): Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    val unknown = ids.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    if (ids.isEmpty) all else all.view.filterKeys(ids.toSet).toMap
+  }
+
   def oracleSql: Map[String, String] = Map(
     "q1_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus,

@@ -16,24 +16,14 @@ import graft.core.{DeadLetterSerde, ErrorClassifier, ErrorFrame}
   */
 object ErrorCaptureTestKit {
 
-  /** Deterministic local session configured like production graft
-    * deployments expect (ANSI on — capture relies on failing casts
-    * throwing; small shuffle fan-out; UTC; nanos-as-long parquet reads) —
-    * the analog of ErrorCaptureTopologyTest.getKafkaProperties().
+  /** Deterministic local session configured exactly like graft's own
+    * mains and specs (graft.Sessions: ANSI on — capture relies on
+    * failing casts throwing; UTC; nanos-as-long parquet reads; shuffle
+    * fan-out = `threads`) — the analog of
+    * ErrorCaptureTopologyTest.getKafkaProperties().
     */
-  def localSession(appName: String = "graft-testkit", threads: Int = 4): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$threads]")
-      .appName(appName)
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.shuffle.partitions", threads)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  def localSession(appName: String = "graft-testkit", threads: Int = 4): SparkSession =
+    graft.Sessions.local(threads, appName)
 
   /** All three branches of one capture topology, materialized. */
   final case class CaptureResult(values: DataFrame, errors: DataFrame, deadLetters: DataFrame)

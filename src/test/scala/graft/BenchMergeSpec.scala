@@ -162,4 +162,34 @@ class BenchMergeSpec extends AnyFunSuite {
     assert(m.isEmpty)
     assert(warns.exists(_.contains("sf")))
   }
+
+  // the indented json.dump(indent=1) layout of the sweep artifacts
+  // (bench_sf1_r15.json): whitespace must not change the parse
+  private def pretty(sf: String) =
+    s"""{
+       | "metric": "total",
+       | "value": 2.0,
+       | "unit": "sec",
+       | "queries": {
+       |  "q001": 2.000000,
+       |  "q002": 9.5E-4
+       | },
+       | "sf": "$sf",
+       | "cpus": 32
+       |}
+       |""".stripMargin
+
+  test("pretty-printed same-SF prior parses like the one-line form") {
+    val compact = s"""{"metric":"total","value":2.0,"unit":"sec","queries":{"q001":2.000000,"q002":9.5E-4},"sf":"${Bench.defaultSfDir}","cpus":32}"""
+    val (m, warns) = Bench.parsePrior(pretty(Bench.defaultSfDir), Bench.defaultSfDir, "32")
+    assert(m === Map("q001" -> 2.0, "q002" -> 9.5e-4))
+    assert(m === Bench.parsePrior(compact, Bench.defaultSfDir, "32")._1)
+    assert(warns.isEmpty)
+  }
+
+  test("pretty-printed foreign-SF prior is rejected with the sf warning") {
+    val (m, warns) = Bench.parsePrior(pretty("sf1"), Bench.defaultSfDir, "32")
+    assert(m.isEmpty)
+    assert(warns.exists(_.contains("measured sf 'sf1'")), warns)
+  }
 }

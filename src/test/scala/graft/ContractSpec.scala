@@ -9,6 +9,15 @@ class ContractSpec extends AnyFunSuite {
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
   }
 
+  test("query selection: empty selects all, known ids subset, unknown ids fail") {
+    assert(SparkEntry.select(Nil).keySet === SparkEntry.queries.keySet)
+    assert(SparkEntry.select(Seq("q1_pricing_summary")).keySet ===
+      Set("q1_pricing_summary"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Seq("q1_pricing_summary", "typo_id")))
+    assert(e.getMessage.contains("unknown queries: typo_id"))
+  }
+
   test("oracle SQL has no stray tabs or CRs (driver JSON safety)") {
     SparkEntry.oracleSql.foreach { case (name, sql) =>
       assert(!sql.contains("\r"), s"$name contains CR")
