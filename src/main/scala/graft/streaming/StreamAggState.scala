@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit, min, when}
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -11,12 +11,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * workable shape: the state table is key-cardinality-sized, each
   * trigger costs one batch aggregate plus one state merge.
   *
-  * Crash consistency reuses the epoch-keyed store contract of the
-  * retry pending store (StreamErrorHandling round 6): trigger `N`
-  * reads the newest `epoch=M` with `M < N` and OVERWRITES `epoch=N`,
-  * so a crash-replayed trigger recomputes against the untouched input
-  * epoch and rewrites its own output — no double counting, pinned by
-  * the same kind of replay spec.
+  * Every operator here runs on [[EpochStore.run]] and keeps its state
+  * in an [[EpochStore]]: the crash-replay contract (outputs are
+  * `batch_id=N` overwrites written first, a state store keeps at most 2
+  * epochs) lives there alone, and StoreReplayPropertySpec proves it
+  * for every store.
   */
 object StreamAggState {
 
@@ -27,39 +26,27 @@ object StreamAggState {
   def maintainAggState(stream: DataFrame, keyCols: Seq[String],
       sumCols: Seq[String], statePath: String,
       checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processTrigger(batch.toDF(), batchId, keyCols, sumCols, statePath)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processTrigger(batch, batchId, keyCols, sumCols, statePath)
+    }
 
-  /** One trigger, factored out so the crash-replay contract is testable
-    * deterministically: calling this twice with the same `batchId` must
-    * leave the same state (the second call reads the same `epoch<N`
-    * input and overwrites the same `epoch=N` output).
-    */
   private[graft] def processTrigger(batch: DataFrame, batchId: Long,
       keyCols: Seq[String], sumCols: Seq[String], statePath: String): Unit = {
-    val spark = batch.sparkSession
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
+    val state = EpochStore(statePath)
     // materialize = false: the epoch write below IS the round's
     // materialization, and the next trigger reads from parquet — the
     // lineage truncates by construction
-    graft.operators.Pipeline
-      .refreshAggState(prior, batch, keyCols, sumCols, materialize = false)
-      .write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
+    state.write(graft.operators.Pipeline.refreshAggState(
+      state.before(batch.sparkSession, batchId), batch, keyCols, sumCols,
+      materialize = false), batchId)
   }
 
-  /** The current (latest-epoch) aggregate state, if any trigger ran.
-    * Note: state KEYS never regress (the merge unions key sets), so a
-    * readable-but-empty newest epoch can only mean "no data yet" —
-    * the empty-dir fallback inherited from the pending store is safe
-    * here too.
+  /** The current (latest-epoch) state of a store, if any trigger ran.
+    * Note: state KEYS never regress (the merges union key sets), so a
+    * readable-but-empty newest epoch can only mean "no data yet".
     */
   def readState(spark: SparkSession, statePath: String): Option[DataFrame] =
-    StreamErrorHandling.readPending(spark, statePath)
+    EpochStore(statePath).latest(spark)
 
   /** Streaming burst detection against a MAINTAINED per-user
     * event-time store — ST34's store face (the punctuate face is
@@ -69,28 +56,22 @@ object StreamAggState {
     * current Kleinberg episodes are always derivable by running the
     * UNCHANGED compiled batch operator over the store
     * ([[burstEpisodesFromState]] — StreamingSpec pins equality with
-    * oracle-verified q55 over the same corpus). Epoch overwrite
-    * inherits the family crash contract (StoreReplayPropertySpec
-    * membership); epoch GC bounds storage at O(corpus).
+    * oracle-verified q55 over the same corpus). The store holds each
+    * distinct pair once, so with its 2 epochs storage stays O(corpus).
     */
   def maintainBurstEvents(stream: DataFrame, statePath: String,
       checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processBurstTrigger(batch.toDF(), batchId, statePath)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processBurstTrigger(batch, batchId, statePath)
+    }
 
   private[graft] def processBurstTrigger(batch: DataFrame, batchId: Long,
       statePath: String): Unit = {
-    val spark = batch.sparkSession
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
+    val state = EpochStore(statePath)
     val events = batch.select(col("user_id").cast("long").as("user_id"),
       col("ts").cast("long").as("ts"))
-    prior.map(_.unionByName(events)).getOrElse(events).distinct()
-      .write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
+    state.write(state.before(batch.sparkSession, batchId)
+      .map(_.unionByName(events)).getOrElse(events).distinct(), batchId)
   }
 
   /** Current burst episodes over everything the store has seen — the
@@ -100,22 +81,6 @@ object StreamAggState {
     readState(spark, statePath)
       .map(st => graft.operators.Bursts.kleinberg(st, s, gamma))
 
-  /** Streaming incremental near-dup detection against a MAINTAINED LSH
-    * band index — the streaming face of d6/d25: each trigger signs
-    * ONLY its batch, probes the epoch-keyed index of everything seen
-    * before, emits the verified corpus×batch (da, db, jaccard) pairs
-    * for the trigger (d6's `minHashLshIncremental` semantics — the
-    * spec pins per-trigger equality with that batch twin), then
-    * rewrites BOTH state epochs (band index, shingle sets) with the
-    * batch folded in. The PROBE is what's incremental (∝ batch size);
-    * the epoch rewrite is O(corpus) I/O per trigger — the
-    * compacted-log family's documented shape — and epoch GC keeps
-    * STORAGE at O(corpus), never O(triggers × corpus). Inherits the
-    * family crash contract: a replayed trigger reads the untouched
-    * epochs < N and overwrites epoch=N plus its per-batch pair dir —
-    * proven by its StoreReplayPropertySpec membership, not a bespoke
-    * test.
-    */
   /** Streaming ExactSubstr dedup against a MAINTAINED fingerprint
     * store — the streaming face of D34 the way maintainLshDedup is
     * D6's: each trigger winnow-selects ONLY its batch, merges its
@@ -129,32 +94,26 @@ object StreamAggState {
     * batch operator. When doc ids are monotone with arrival order
     * (ingest reality), the union of all trigger outputs EQUALS the
     * batch exactSubstrTrim of the full corpus — pinned by
-    * StreamingSpec; crash-replay idempotence by
-    * StoreReplayPropertySpec membership.
+    * StreamingSpec.
     */
   def maintainExactSubstr(stream: DataFrame, k: Int, w: Int,
       statePath: String, valuesPath: String,
       checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processExactSubstrTrigger(batch.toDF(), batchId, k, w,
-          statePath, valuesPath)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processExactSubstrTrigger(batch, batchId, k, w,
+        statePath, valuesPath)
+    }
 
   private[graft] def processExactSubstrTrigger(batch: DataFrame,
       batchId: Long, k: Int, w: Int, statePath: String,
       valuesPath: String): Unit = {
     import graft.operators.Dedup
-    val spark = batch.sparkSession
+    val state = EpochStore(statePath)
     val toks = Dedup.tokenFrame(batch, "text", "doc_id").localCheckpoint()
     val occ = Dedup.winnowOccurrences(toks, k, w)
       .localCheckpoint() // feeds the store merge AND the removals join
     val batchCanon = occ.groupBy(col("fp")).agg(min(col("okey")).as("keep_key"))
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
-    val store = prior
+    val store = state.before(batch.sparkSession, batchId)
       .map(_.unionByName(batchCanon).groupBy(col("fp"))
         .agg(min(col("keep_key")).as("keep_key")))
       .getOrElse(batchCanon)
@@ -162,22 +121,9 @@ object StreamAggState {
     val removals = occ.join(store, "fp")
       .filter(col("okey") =!= col("keep_key"))
       .select(col("doc_id"), col("p"))
-    // values BEFORE the state epoch: a crash in between replays the
-    // trigger, which rewrites both destinations idempotently (the
-    // store was computed from epochs < N only)
     Dedup.trimByRemovals(toks, removals, k)
       .write.mode("overwrite").parquet(s"$valuesPath/batch_id=$batchId")
-    store.write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
-    // epoch GC: only the newest epoch below batchId is replay-reachable
-    val old = StreamErrorHandling.pendingEpochs(spark, statePath)
-      .filter(_ < batchId)
-    if (old.size > 1) {
-      val p = new org.apache.hadoop.fs.Path(statePath)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      old.dropRight(1).foreach { e =>
-        fs.delete(new org.apache.hadoop.fs.Path(p, s"epoch=$e"), true); ()
-      }
-    }
+    state.write(store, batchId)
   }
 
   /** Streaming per-domain document cap — P15's live face (ST37): the
@@ -192,32 +138,30 @@ object StreamAggState {
     * only while prior_count + rank ≤ k; admitted docs land in
     * values/batch_id=N, over-cap docs in rejected/batch_id=N (the DLQ
     * discipline — suppression is observable, never silent), and the
-    * incremented counts overwrite epoch=N.
+    * incremented counts become the new state.
     *
     * Batch-twin: when arrival order is doc-id order, the union of
     * admitted outputs EQUALS batch [[graft.operators.Pipeline
-    * .capPerDomain]] of the full corpus (spec-pinned); crash-replay
-    * idempotence by StoreReplayPropertySpec membership (values before
-    * state, epochs < N untouched).
+    * .capPerDomain]] of the full corpus (spec-pinned).
     */
   def maintainDomainCap(stream: DataFrame, domainCol: String, k: Int,
       statePath: String, valuesPath: String, rejectedPath: String,
       checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processDomainCapTrigger(batch.toDF(), batchId, domainCol, k,
-          statePath, valuesPath, rejectedPath)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processDomainCapTrigger(batch, batchId, domainCol, k,
+        statePath, valuesPath, rejectedPath)
+    }
 
   private[graft] def processDomainCapTrigger(batch: DataFrame, batchId: Long,
       domainCol: String, k: Int, statePath: String, valuesPath: String,
       rejectedPath: String): Unit = {
     require(k >= 1, s"domain cap must be >= 1: $k")
     val spark = batch.sparkSession
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
+    val state = EpochStore(statePath)
+    val prior = state.before(spark, batchId).getOrElse(
+      spark.emptyDataset[(String, Long)](
+        org.apache.spark.sql.Encoders.product[(String, Long)])
+        .toDF(domainCol, "n_admitted"))
     val pinned = batch.localCheckpoint() // feeds candidates AND the reject diff
     // bounded-heap thinning: nothing beyond k per domain can be
     // admitted, so the window below never sees more than domains×k rows
@@ -227,41 +171,21 @@ object StreamAggState {
       org.apache.spark.sql.functions.row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(col(domainCol)).orderBy(col("doc_id").asc)))
-    val withPrior = ranked.join(
-      broadcast(prior.getOrElse(
-        spark.emptyDataset[(String, Long)](
-          org.apache.spark.sql.Encoders.product[(String, Long)])
-          .toDF(domainCol, "n_admitted"))),
-      Seq(domainCol), "left_outer")
+    val withPrior = ranked.join(broadcast(prior), Seq(domainCol), "left_outer")
       .withColumn("__room", lit(k.toLong) - coalesce(col("n_admitted"), lit(0L)))
       .localCheckpoint() // admitted values AND the count increment read it
     val admitted = withPrior.filter(col("__rn") <= col("__room"))
       .drop("__rn", "__room", "n_admitted")
-    // values/rejected BEFORE the state epoch (family crash contract)
     admitted.write.mode("overwrite").parquet(s"$valuesPath/batch_id=$batchId")
     pinned.join(admitted.select(col("doc_id").as("__adm")),
         col("doc_id") === col("__adm"), "left_anti")
       .write.mode("overwrite").parquet(s"$rejectedPath/batch_id=$batchId")
     val increments = withPrior.filter(col("__rn") <= col("__room"))
       .groupBy(col(domainCol)).agg(count(lit(1)).as("n_new"))
-    val store = prior.getOrElse(
-        spark.emptyDataset[(String, Long)](
-          org.apache.spark.sql.Encoders.product[(String, Long)])
-          .toDF(domainCol, "n_admitted"))
-      .join(increments, Seq(domainCol), "full_outer")
+    state.write(prior.join(increments, Seq(domainCol), "full_outer")
       .select(col(domainCol),
         (coalesce(col("n_admitted"), lit(0L))
-          + coalesce(col("n_new"), lit(0L))).as("n_admitted"))
-    store.write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
-    val old = StreamErrorHandling.pendingEpochs(spark, statePath)
-      .filter(_ < batchId)
-    if (old.size > 1) {
-      val p = new org.apache.hadoop.fs.Path(statePath)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      old.dropRight(1).foreach { e =>
-        fs.delete(new org.apache.hadoop.fs.Path(p, s"epoch=$e"), true); ()
-      }
-    }
+          + coalesce(col("n_new"), lit(0L))).as("n_admitted")), batchId)
   }
 
   /** Streaming chi-square drift monitor (ST39) — X28's live face: the
@@ -273,57 +197,49 @@ object StreamAggState {
     * written to stats/batch_id=N — so trigger N's statistic is
     * BIT-EQUAL to batch `chiSquare` over everything ingested through
     * trigger N (same cells, same sorted fold; StreamingSpec pins it).
-    * Stats before state (family crash contract); epoch GC.
     */
   def maintainChiSquare(stream: DataFrame, aCol: String, bCol: String,
       statePath: String, statsPath: String,
       checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processChiSquareTrigger(batch.toDF(), batchId, aCol, bCol,
-          statePath, statsPath)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processChiSquareTrigger(batch, batchId, aCol, bCol,
+        statePath, statsPath)
+    }
 
   private[graft] def processChiSquareTrigger(batch: DataFrame, batchId: Long,
       aCol: String, bCol: String, statePath: String,
       statsPath: String): Unit = {
-    val spark = batch.sparkSession
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
+    val state = EpochStore(statePath)
     val batchCells = batch
       .groupBy(col(aCol).as("a"), col(bCol).as("b"))
       .agg(count(lit(1)).as("o"))
-    val store = prior
+    val store = state.before(batch.sparkSession, batchId)
       .map(_.unionByName(batchCells).groupBy(col("a"), col("b"))
         .agg(org.apache.spark.sql.functions.sum(col("o")).as("o")))
       .getOrElse(batchCells)
       .localCheckpoint() // stats derivation AND the epoch write
     graft.operators.Pipeline.chiSquareFromCells(store)
       .write.mode("overwrite").parquet(s"$statsPath/batch_id=$batchId")
-    store.write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
-    val old = StreamErrorHandling.pendingEpochs(spark, statePath)
-      .filter(_ < batchId)
-    if (old.size > 1) {
-      val p = new org.apache.hadoop.fs.Path(statePath)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      old.dropRight(1).foreach { e =>
-        fs.delete(new org.apache.hadoop.fs.Path(p, s"epoch=$e"), true); ()
-      }
-    }
+    state.write(store, batchId)
   }
 
+  /** Streaming incremental near-dup detection against a MAINTAINED LSH
+    * band index — the streaming face of d6/d25: each trigger signs
+    * ONLY its batch, probes the epoch-keyed index of everything seen
+    * before, emits the verified corpus×batch (da, db, jaccard) pairs
+    * for the trigger (d6's `minHashLshIncremental` semantics — the
+    * spec pins per-trigger equality with that batch twin), then
+    * rewrites BOTH stores (band index, shingle sets) with the batch
+    * folded in. The PROBE is what's incremental (∝ batch size); the
+    * store rewrite is O(corpus) I/O per trigger.
+    */
   def maintainLshDedup(stream: DataFrame, numHashes: Int, rowsPerBand: Int,
       shingleSize: Int, threshold: Double, statePath: String,
       pairsPath: String, checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processLshDedupTrigger(batch.toDF(), batchId, numHashes, rowsPerBand,
-          shingleSize, threshold, statePath, pairsPath)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processLshDedupTrigger(batch, batchId, numHashes, rowsPerBand,
+        shingleSize, threshold, statePath, pairsPath)
+    }
 
   private[graft] def processLshDedupTrigger(batch: DataFrame, batchId: Long,
       numHashes: Int, rowsPerBand: Int, shingleSize: Int, threshold: Double,
@@ -336,10 +252,9 @@ object StreamAggState {
       newSets.select(col("doc_id"), graft.functions.Fence(
         graft.functions.MinHashSig(col("ts"), numHashes)).as("sig")),
       rowsPerBand).localCheckpoint()
-    val priorBands = StreamErrorHandling
-      .readPendingBefore(spark, s"$statePath/bands", batchId).map(_._2)
-    val priorDocs = StreamErrorHandling
-      .readPendingBefore(spark, s"$statePath/docs", batchId).map(_._2)
+    val (bands, docs) = (EpochStore(s"$statePath/bands"), EpochStore(s"$statePath/docs"))
+    val priorBands = bands.before(spark, batchId)
+    val priorDocs = docs.before(spark, batchId)
     val pairs = (priorBands, priorDocs) match {
       case (Some(pb), Some(pd)) =>
         val cand = pb.as("a").join(newBands.as("b"),
@@ -357,28 +272,9 @@ object StreamAggState {
             .limit(0),
           newSets, threshold)
     }
-    // per-batch-dir pair output BEFORE the state epochs: a crash
-    // anywhere in between replays the whole trigger, which rewrites
-    // every one of the three destinations idempotently
     pairs.write.mode("overwrite").parquet(s"$pairsPath/batch_id=$batchId")
-    priorBands.map(_.unionByName(newBands)).getOrElse(newBands)
-      .write.mode("overwrite").parquet(s"$statePath/bands/epoch=$batchId")
-    priorDocs.map(_.unionByName(newSets)).getOrElse(newSets)
-      .write.mode("overwrite").parquet(s"$statePath/docs/epoch=$batchId")
-    // epoch GC (the retry-store idiom): of the epochs below batchId
-    // only the NEWEST is replay-reachable — without this, storage is
-    // O(triggers × corpus)
-    Seq(s"$statePath/bands", s"$statePath/docs").foreach { dir =>
-      val prior = StreamErrorHandling.pendingEpochs(spark, dir)
-        .filter(_ < batchId)
-      if (prior.size > 1) {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        prior.dropRight(1).foreach { e =>
-          fs.delete(new org.apache.hadoop.fs.Path(p, s"epoch=$e"), true); ()
-        }
-      }
-    }
+    bands.write(priorBands.map(_.unionByName(newBands)).getOrElse(newBands), batchId)
+    docs.write(priorDocs.map(_.unionByName(newSets)).getOrElse(newSets), batchId)
   }
 
   /** Streaming log compaction (ST11) — the compacted-topic VIEW
@@ -388,37 +284,28 @@ object StreamAggState {
     * `Pipeline.mergeCompacted`, whose monoid property guarantees the
     * state equals one global compaction of all history. Per trigger
     * only key-cardinality frames shuffle; the log is read once, ever.
-    * Epoch-keyed state store — the crash-replay contract of
-    * [[maintainAggState]]. Read with [[readState]]; apply tombstone
+    * Read with [[readState]]; apply tombstone
     * semantics at read time (see mergeCompacted's doc for why they
     * must not be dropped mid-stream).
     */
   def maintainCompactedLog(stream: DataFrame, keyCols: Seq[String],
       orderCols: Seq[String], payloadCols: Seq[String], statePath: String,
       checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processCompactTrigger(batch.toDF(), batchId, keyCols, orderCols,
-          payloadCols, statePath)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processCompactTrigger(batch, batchId, keyCols, orderCols,
+        payloadCols, statePath)
+    }
 
   private[graft] def processCompactTrigger(batch: DataFrame, batchId: Long,
       keyCols: Seq[String], orderCols: Seq[String], payloadCols: Seq[String],
       statePath: String): Unit = {
-    val spark = batch.sparkSession
+    val state = EpochStore(statePath)
     val bc = graft.operators.Pipeline.compactLog(batch, keyCols, orderCols,
       payloadCols)
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
-    val merged = prior match {
-      case Some(st) =>
-        graft.operators.Pipeline.mergeCompacted(st, bc, keyCols, orderCols,
-          payloadCols)
-      case None => bc
-    }
-    merged.write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
+    state.write(state.before(batch.sparkSession, batchId)
+      .map(graft.operators.Pipeline.mergeCompacted(_, bc, keyCols, orderCols,
+        payloadCols))
+      .getOrElse(bc), batchId)
   }
 
   /** Streaming CDC emission (ST16) — [[maintainCompactedLog]] plus a
@@ -429,31 +316,26 @@ object StreamAggState {
     * snapshot diff and the feed D13's changelog apply consumes.
     * Detection is one left-outer join of two key-cardinality frames
     * (merged vs prior) on the key, comparing the monotone `n_versions`
-    * counter — no payload comparison, no history rescans. Both stores
-    * are epoch-keyed (crash replay rewrites, never re-appends), and
-    * because changelog rows are full after-images, "latest epoch
-    * mentioning the key" IS the state — the spec pins that fixed
-    * point.
+    * counter — no payload comparison, no history rescans. The
+    * changelog is an output (`cdcPath/epoch=N`, never collected), and
+    * because its rows are full after-images, "latest epoch mentioning
+    * the key" IS the state — the spec pins that fixed point.
     */
   def maintainCompactedLogCdc(stream: DataFrame, keyCols: Seq[String],
       orderCols: Seq[String], payloadCols: Seq[String], statePath: String,
       cdcPath: String, checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processCdcTrigger(batch.toDF(), batchId, keyCols, orderCols,
-          payloadCols, statePath, cdcPath)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processCdcTrigger(batch, batchId, keyCols, orderCols,
+        payloadCols, statePath, cdcPath)
+    }
 
   private[graft] def processCdcTrigger(batch: DataFrame, batchId: Long,
       keyCols: Seq[String], orderCols: Seq[String], payloadCols: Seq[String],
       statePath: String, cdcPath: String): Unit = {
-    val spark = batch.sparkSession
+    val state = EpochStore(statePath)
     val bc = graft.operators.Pipeline.compactLog(batch, keyCols, orderCols,
       payloadCols)
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
+    val prior = state.before(batch.sparkSession, batchId)
     // pin: the merged frame feeds the state write AND the diff join —
     // unpinned it would re-run the merge aggregate once per consumer
     val merged = (prior match {
@@ -475,7 +357,7 @@ object StreamAggState {
           .drop("__prior_nv")
     }
     cdc.write.mode("overwrite").parquet(s"$cdcPath/epoch=$batchId")
-    merged.write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
+    state.write(merged, batchId)
   }
 
   /** Streaming SCD Type-2 maintenance (ST20) — the historized
@@ -493,28 +375,23 @@ object StreamAggState {
     * open version (a batch row OLDER than a key's open
     * `effective_from` would belong inside closed history — that's a
     * batch d22 recompute, documented in SURVEY §6). `tieCol` must be a
-    * LONG. Epoch-keyed store: crash replay rewrites its own epoch.
+    * LONG.
     */
   def maintainScd2(stream: DataFrame, keyCols: Seq[String],
       valueCols: Seq[String], tsCol: String, tieCol: String,
       statePath: String, checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processScd2Trigger(batch.toDF(), batchId, keyCols, valueCols, tsCol,
-          tieCol, statePath)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processScd2Trigger(batch, batchId, keyCols, valueCols, tsCol,
+        tieCol, statePath)
+    }
 
   private[graft] def processScd2Trigger(batch: DataFrame, batchId: Long,
       keyCols: Seq[String], valueCols: Seq[String], tsCol: String,
       tieCol: String, statePath: String): Unit = {
     import org.apache.spark.sql.functions._
-    val spark = batch.sparkSession
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
+    val state = EpochStore(statePath)
     val slim = batch.select((keyCols ++ valueCols :+ tsCol :+ tieCol).map(col): _*)
-    val merged = prior match {
+    val merged = state.before(batch.sparkSession, batchId) match {
       case None => graft.operators.Pipeline.scd2(slim, keyCols, valueCols,
         tsCol, tieCol)
       case Some(st) =>
@@ -532,7 +409,7 @@ object StreamAggState {
           .drop("__voff")
         closed.unionByName(adjusted)
     }
-    merged.write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
+    state.write(merged, batchId)
   }
 
   /** Streaming anomaly detection (ST10) — the streaming twin of q34's
@@ -545,24 +422,16 @@ object StreamAggState {
     * into the state via [[maintainAggState]]'s merge — only
     * key-cardinality frames ever shuffle, history is never rescanned.
     *
-    * BOTH stores are epoch-keyed: trigger `N` reads state `epoch<N`,
-    * overwrites state `epoch=N` AND verdicts `epoch=N` — a
-    * crash-replayed trigger rewrites its own epochs instead of
-    * appending, so no duplicate verdicts and no double-counted state
-    * (the same contract the retry pending store pins). Read the verdict
-    * stream as one frame with `spark.read.parquet(outPath)` (epochs are
-    * plain subdirs).
+    * Verdicts are an output (`outPath/epoch=N`, never collected): read
+    * the verdict stream as one frame with `spark.read.parquet(outPath)`.
     */
   def detectAnomalies(stream: DataFrame, keyCols: Seq[String],
       valueCol: String, k: Int, minPrior: Long, statePath: String,
       outPath: String, checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processAnomalyTrigger(batch.toDF(), batchId, keyCols, valueCol, k,
-          minPrior, statePath, outPath)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processAnomalyTrigger(batch, batchId, keyCols, valueCol, k,
+        minPrior, statePath, outPath)
+    }
 
   private[graft] def processAnomalyTrigger(batch: DataFrame, batchId: Long,
       keyCols: Seq[String], valueCol: String, k: Int, minPrior: Long,
@@ -572,13 +441,12 @@ object StreamAggState {
     // safe: n_prior = 0 short-circuits the flag to false before the
     // null mu/vr of an unseen key can be compared
     require(k >= 1 && minPrior >= 1, s"need k/minPrior >= 1: $k/$minPrior")
-    val spark = batch.sparkSession
+    val state = EpochStore(statePath)
     val dec = "decimal(18,4)"
     val enriched = batch
       .withColumn("__v", col(valueCol).cast(dec))
       .withColumn("__vv", col(valueCol).cast(dec) * col(valueCol).cast(dec))
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
+    val prior = state.before(batch.sparkSession, batchId)
     val judged = prior match {
       case Some(st) =>
         val stats = st.select(keyCols.map(col) :+ col("n").as("n_prior") :+
@@ -596,10 +464,8 @@ object StreamAggState {
         batch.withColumn("n_prior", lit(0L)).withColumn("flag", lit(false))
     }
     judged.write.mode("overwrite").parquet(s"$outPath/epoch=$batchId")
-    graft.operators.Pipeline
-      .refreshAggState(prior, enriched, keyCols, Seq("__v", "__vv"),
-        materialize = false)
-      .write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
+    state.write(graft.operators.Pipeline.refreshAggState(prior, enriched,
+      keyCols, Seq("__v", "__vv"), materialize = false), batchId)
   }
 
   /** Streaming trailing-window distinct maintenance (ST24) — live
@@ -610,35 +476,26 @@ object StreamAggState {
     * over all history (the spec pins exact estimate equality, not
     * approximate) — so [[readWindowEstimates]] is exactly x14's sketch
     * read tail over the state. Per trigger only day-cardinality sketch
-    * frames shuffle; rows are read once, on arrival, ever. Epoch-keyed
-    * store: crash replay rewrites its own epoch, pinned like the rest.
+    * frames shuffle; rows are read once, on arrival, ever.
     */
   def maintainSlidingDistinct(stream: DataFrame, dayCol: String,
       keyCol: String, statePath: String, checkpointPath: String,
       lgK: Int = 12): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processSlidingDistinctTrigger(batch.toDF(), batchId, dayCol, keyCol,
-          statePath, lgK)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processSlidingDistinctTrigger(batch, batchId, dayCol, keyCol,
+        statePath, lgK)
+    }
 
   private[graft] def processSlidingDistinctTrigger(batch: DataFrame,
       batchId: Long, dayCol: String, keyCol: String, statePath: String,
       lgK: Int): Unit = {
     import org.apache.spark.sql.functions._
-    val spark = batch.sparkSession
+    val state = EpochStore(statePath)
     val bs = graft.operators.Pipeline.daySketchTable(batch, dayCol, keyCol, lgK)
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
-    val merged = prior match {
-      case None => bs
-      case Some(st) => st.unionByName(bs)
-        .groupBy(col(dayCol))
-        .agg(hll_union_agg(col("sketch"), lit(true)).as("sketch"))
-    }
-    merged.write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
+    state.write(state.before(batch.sparkSession, batchId)
+      .map(_.unionByName(bs).groupBy(col(dayCol))
+        .agg(hll_union_agg(col("sketch"), lit(true)).as("sketch")))
+      .getOrElse(bs), batchId)
   }
 
   /** The live trailing-window estimates off the maintained day-sketch
@@ -657,33 +514,26 @@ object StreamAggState {
     * group-cardinality KB blobs shuffle; rows are seen once, on
     * arrival. GK merge approximately preserves the rank bound (the X20
     * 2ε note — the spec pins a per-merge-widened tolerance against the
-    * exact ranks over all history). Epoch-keyed store, pinned replay.
+    * exact ranks over all history).
     */
   def maintainQuantileSketch(stream: DataFrame, groupCol: String,
       valueCol: String, relativeError: Double, statePath: String,
       checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processQuantileTrigger(batch.toDF(), batchId, groupCol, valueCol,
-          relativeError, statePath)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processQuantileTrigger(batch, batchId, groupCol, valueCol,
+        relativeError, statePath)
+    }
 
   private[graft] def processQuantileTrigger(batch: DataFrame, batchId: Long,
       groupCol: String, valueCol: String, relativeError: Double,
       statePath: String): Unit = {
-    val spark = batch.sparkSession
+    val state = EpochStore(statePath)
     val bs = graft.operators.Pipeline.quantileSketch(batch, groupCol,
       valueCol, relativeError)
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
-    val merged = prior match {
-      case None => bs
-      case Some(st) => graft.operators.Pipeline
-        .mergeQuantileSketchesBy(st.unionByName(bs), groupCol)
-    }
-    merged.write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
+    state.write(state.before(batch.sparkSession, batchId)
+      .map(st => graft.operators.Pipeline
+        .mergeQuantileSketchesBy(st.unionByName(bs), groupCol))
+      .getOrElse(bs), batchId)
   }
 
   /** Streaming frequency-sketch maintenance (ST27) — completes the
@@ -693,35 +543,27 @@ object StreamAggState {
     * byte-exact — so unlike the GK path, the maintained table EQUALS
     * the batch-computed one bit for bit (the spec pins blob equality,
     * not a tolerance). Heavy-hitter probes and storm detection off the
-    * live state touch KB blobs, never rows. Epoch-keyed store, pinned
-    * replay.
+    * live state touch KB blobs, never rows.
     */
   def maintainFreqSketch(stream: DataFrame, groupCol: String,
       valueCol: String, statePath: String, checkpointPath: String,
       eps: Double = 0.001, confidence: Double = 0.99,
       seed: Int = 42): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processFreqTrigger(batch.toDF(), batchId, groupCol, valueCol,
-          statePath, eps, confidence, seed)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processFreqTrigger(batch, batchId, groupCol, valueCol,
+        statePath, eps, confidence, seed)
+    }
 
   private[graft] def processFreqTrigger(batch: DataFrame, batchId: Long,
       groupCol: String, valueCol: String, statePath: String,
       eps: Double, confidence: Double, seed: Int): Unit = {
-    val spark = batch.sparkSession
+    val state = EpochStore(statePath)
     val bs = graft.operators.Pipeline.freqSketch(batch, groupCol, valueCol,
       eps, confidence, seed)
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
-    val merged = prior match {
-      case None => bs
-      case Some(st) => graft.operators.Pipeline
-        .mergeFreqSketchesBy(st.unionByName(bs), groupCol)
-    }
-    merged.write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
+    state.write(state.before(batch.sparkSession, batchId)
+      .map(st => graft.operators.Pipeline
+        .mergeFreqSketchesBy(st.unionByName(bs), groupCol))
+      .getOrElse(bs), batchId)
   }
 
   /** Streaming cluster-on-write ingest (ST26): each micro-batch lands
@@ -742,13 +584,10 @@ object StreamAggState {
   def clusterOnWrite(stream: DataFrame, root: String, cols: Seq[String],
       numFiles: Int, minDeltaBatches: Int,
       checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processClusterOnWriteTrigger(batch.toDF(), batchId, root, cols,
-          numFiles, minDeltaBatches)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processClusterOnWriteTrigger(batch, batchId, root, cols,
+        numFiles, minDeltaBatches)
+    }
 
   private[graft] def processClusterOnWriteTrigger(batch: DataFrame,
       batchId: Long, root: String, cols: Seq[String], numFiles: Int,
@@ -782,33 +621,26 @@ object StreamAggState {
     * (vec_id, embedding, label) — the s13 corpus contract.
     *
     * State: `statePath/vectors` (pinned corpus) and `statePath/within`
-    * (within-cell top-g edges), both epoch-keyed with the crash-replay
-    * contract of [[maintainAggState]]: graph output writes BEFORE the
-    * state epochs, a replayed trigger recomputes from epochs < N and
-    * rewrites all three destinations idempotently
-    * (StoreReplayPropertySpec row).
+    * (within-cell top-g edges), one [[EpochStore]] each.
     */
   def maintainKnnGraph(stream: DataFrame, g: Int, rounds: Int, bridges: Int,
       statePath: String, graphPath: String,
       checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processKnnGraphTrigger(batch.toDF(), batchId, g, rounds, bridges,
-          statePath, graphPath)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processKnnGraphTrigger(batch, batchId, g, rounds, bridges,
+        statePath, graphPath)
+    }
 
   private[graft] def processKnnGraphTrigger(batch: DataFrame, batchId: Long,
       g: Int, rounds: Int, bridges: Int, statePath: String,
       graphPath: String): Unit = {
     import graft.operators.{Similarity, TopK}
     val spark = batch.sparkSession
+    val (vectors, within) =
+      (EpochStore(s"$statePath/vectors"), EpochStore(s"$statePath/within"))
     val newV = Similarity.pinVectors(batch, "label")
-    val priorV = StreamErrorHandling
-      .readPendingBefore(spark, s"$statePath/vectors", batchId).map(_._2)
-    val priorW = StreamErrorHandling
-      .readPendingBefore(spark, s"$statePath/within", batchId).map(_._2)
+    val priorV = vectors.before(spark, batchId)
+    val priorW = within.before(spark, batchId)
     val allV = priorV.map(_.unionByName(newV)).getOrElse(newV)
       .localCheckpoint() // feeds scoring, refine, and the vectors epoch
     // only NEW-touching ordered pairs are scored: dst-new against the
@@ -824,22 +656,9 @@ object StreamAggState {
       Seq("src"), Seq(TopK.desc("cosine"), TopK.asc("dst")), g)
       .localCheckpoint() // consumed by refine AND the within epoch
     val graph = Similarity.refineKnnGraph(allV, w, g, rounds, bridges)
-    // graph BEFORE the state epochs (the established replay ordering)
     graph.write.mode("overwrite").parquet(s"$graphPath/batch_id=$batchId")
-    allV.write.mode("overwrite").parquet(s"$statePath/vectors/epoch=$batchId")
-    w.write.mode("overwrite").parquet(s"$statePath/within/epoch=$batchId")
-    // epoch GC: only the newest epoch below batchId is replay-reachable
-    Seq(s"$statePath/vectors", s"$statePath/within").foreach { dir =>
-      val prior = StreamErrorHandling.pendingEpochs(spark, dir)
-        .filter(_ < batchId)
-      if (prior.size > 1) {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        prior.dropRight(1).foreach { e =>
-          fs.delete(new org.apache.hadoop.fs.Path(p, s"epoch=$e"), true); ()
-        }
-      }
-    }
+    vectors.write(allV, batchId)
+    within.write(w, batchId)
   }
 
   /** Streaming BM25 retrieval against a MAINTAINED postings store —
@@ -855,45 +674,27 @@ object StreamAggState {
     * both ways). The tokenize-and-aggregate cost — the corpus-sized
     * part — is ∝ batch; the scoring join prunes to query-term postings
     * before anything scores (the t33 shape); the store rewrite is the
-    * compacted-log family's documented O(corpus) I/O per trigger with
-    * epoch GC holding STORAGE at O(corpus). Crash contract: scores
-    * write BEFORE the state epoch; a replayed trigger recomputes from
-    * epochs < N and rewrites both idempotently
-    * (StoreReplayPropertySpec row).
+    * compacted-log family's documented O(corpus) I/O per trigger.
     */
   def maintainBm25(stream: DataFrame, queryTerms: DataFrame, k: Int,
       statePath: String, scoresPath: String, checkpointPath: String,
       k1: Double = 1.2, b: Double = 0.75): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processBm25Trigger(batch.toDF(), batchId, queryTerms, k, k1, b,
-          statePath, scoresPath)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processBm25Trigger(batch, batchId, queryTerms, k, k1, b,
+        statePath, scoresPath)
+    }
 
   private[graft] def processBm25Trigger(batch: DataFrame, batchId: Long,
       queryTerms: DataFrame, k: Int, k1: Double, b: Double,
       statePath: String, scoresPath: String): Unit = {
     import graft.operators.TextAnalysis
-    val spark = batch.sparkSession
+    val state = EpochStore(statePath)
     val batchTf = TextAnalysis.termFrequencies(batch)
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
-    val store = prior.map(_.unionByName(batchTf)).getOrElse(batchTf)
+    val store = state.before(batch.sparkSession, batchId)
+      .map(_.unionByName(batchTf)).getOrElse(batchTf)
       .localCheckpoint() // consumed by scoring AND the epoch write
     TextAnalysis.bm25TopDocsFromTf(store, queryTerms, k, k1, b)
       .write.mode("overwrite").parquet(s"$scoresPath/batch_id=$batchId")
-    store.write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
-    // epoch GC: only the newest epoch below batchId is replay-reachable
-    val old = StreamErrorHandling.pendingEpochs(spark, statePath)
-      .filter(_ < batchId)
-    if (old.size > 1) {
-      val p = new org.apache.hadoop.fs.Path(statePath)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      old.dropRight(1).foreach { e =>
-        fs.delete(new org.apache.hadoop.fs.Path(p, s"epoch=$e"), true); ()
-      }
-    }
+    state.write(store, batchId)
   }
 }

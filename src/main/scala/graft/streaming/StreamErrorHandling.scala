@@ -13,9 +13,10 @@ import graft.core.{ErrorClassifier, ErrorFrame, model}
   * `mapped.to(OUTPUT_TOPIC)` + `errors.to(ERROR_TOPIC)` (README.md usage
   * example; DeadLetterProcessor.java).
   *
-  * Exactly-once: both branches are written inside one foreachBatch with
-  * the streaming checkpoint tracking batch ids; parquet sinks are
-  * idempotent per batch directory overwrite by batchId partition.
+  * Exactly-once: every sink operator runs on [[EpochStore.run]], and
+  * the crash-replay contract lives in [[EpochStore]] alone — outputs
+  * are `batch_id=N` overwrites written first, and a parquet state
+  * store keeps at most 2 epochs.
   */
 object StreamErrorHandling {
 
@@ -107,26 +108,20 @@ object StreamErrorHandling {
       dlqPath: String,
       checkpointPath: String): StreamingQuery = {
     val captured = capture(stream, results, input).observedNamed(TelemetryName)
-    captured.df.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // persist: the two sink writes below would otherwise each re-run
-        // the whole micro-batch plan — paying the capture scan twice AND
-        // double-counting the observe telemetry accumulators
-        val cached = batch.toDF().persist()
-        try {
-          val ef = ErrorFrame(cached, captured.resultNames, input)
-          // exactly-once: each micro-batch owns a batch_id=N partition dir
-          // and overwrites it — replaying the batch after a crash is
-          // idempotent, readers see base-path partition discovery.
-          ef.values.write.mode("overwrite")
-            .parquet(s"$valuesPath/batch_id=$batchId")
-          ef.deadLetters(description).write.mode("overwrite")
-            .parquet(s"$dlqPath/batch_id=$batchId")
-        } finally { cached.unpersist(); () }
-        ()
-      }
-      .start()
+    EpochStore.run(captured.df, checkpointPath) { (batch, batchId) =>
+      // persist: the two sink writes below would otherwise each re-run
+      // the whole micro-batch plan — paying the capture scan twice AND
+      // double-counting the observe telemetry accumulators
+      val cached = batch.persist()
+      try {
+        val ef = ErrorFrame(cached, captured.resultNames, input)
+        ef.values.write.mode("overwrite")
+          .parquet(s"$valuesPath/batch_id=$batchId")
+        ef.deadLetters(description).write.mode("overwrite")
+          .parquet(s"$dlqPath/batch_id=$batchId")
+      } finally { cached.unpersist(); () }
+      ()
+    }
   }
 
   /** [[captureToDlq]] with per-trigger DLQ rate limiting (error-storm
@@ -137,8 +132,6 @@ object StreamErrorHandling {
     * then never flood the DLQ store: per trigger the stored rows are
     * bounded by classes × maxPerClass, while the accounting keeps the
     * true error magnitude observable. Values are never limited.
-    * Same exactly-once layout as [[captureToDlq]] (batch_id=N dirs,
-    * idempotent overwrite on replay).
     */
   def captureToDlqRateLimited(
       stream: DataFrame,
@@ -154,30 +147,27 @@ object StreamErrorHandling {
     // what is STORED, never what is observable (the storm's true
     // magnitude must stay visible in the progress events)
     val captured = capture(stream, results, input).observedNamed(TelemetryName)
-    captured.df.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val cached = batch.toDF().persist()
+    EpochStore.run(captured.df, checkpointPath) { (batch, batchId) =>
+      val cached = batch.persist()
+      try {
+        val ef = ErrorFrame(cached, captured.resultNames, input)
+        ef.values.write.mode("overwrite")
+          .parquet(s"$valuesPath/batch_id=$batchId")
+        val dl = ef.deadLetters(description)
+          .withColumn("__class", col("cause.error_class")).persist()
         try {
-          val ef = ErrorFrame(cached, captured.resultNames, input)
-          ef.values.write.mode("overwrite")
-            .parquet(s"$valuesPath/batch_id=$batchId")
-          val dl = ef.deadLetters(description)
-            .withColumn("__class", col("cause.error_class")).persist()
-          try {
-            val kept = graft.sources.Sinks.rateLimitDeadLetters(dl,
-              Seq("__class"), Seq(graft.operators.TopK.asc("input_value")), maxPerClass)
-            kept.drop("__class").write.mode("overwrite")
-              .parquet(s"$dlqPath/batch_id=$batchId")
-            graft.sources.Sinks.rateLimitAccounting(dl, kept, Seq("__class"))
-              .withColumnRenamed("__class", "error_class")
-              .write.mode("overwrite")
-              .parquet(s"$accountingPath/batch_id=$batchId")
-          } finally { dl.unpersist(); () }
-        } finally { cached.unpersist(); () }
-        ()
-      }
-      .start()
+          val kept = graft.sources.Sinks.rateLimitDeadLetters(dl,
+            Seq("__class"), Seq(graft.operators.TopK.asc("input_value")), maxPerClass)
+          kept.drop("__class").write.mode("overwrite")
+            .parquet(s"$dlqPath/batch_id=$batchId")
+          graft.sources.Sinks.rateLimitAccounting(dl, kept, Seq("__class"))
+            .withColumnRenamed("__class", "error_class")
+            .write.mode("overwrite")
+            .parquet(s"$accountingPath/batch_id=$batchId")
+        } finally { dl.unpersist(); () }
+      } finally { cached.unpersist(); () }
+      ()
+    }
   }
 
   /** Column names of the retry carry-over state (not CAPTURE_PREFIX'd:
@@ -205,16 +195,10 @@ object StreamErrorHandling {
     * immediately.
     *
     * The pending store (`<checkpointPath>/graft-pending` unless
-    * `pendingPath` overrides it) is EPOCH-KEYED for crash consistency:
-    * trigger `N` reads the newest `epoch=M` directory with `M < N` and
-    * writes its own state to `epoch=N` (mode overwrite). A crash between
-    * the store write and the checkpoint commit therefore replays batch
-    * `N` against the UNTOUCHED `epoch=M` input and REWRITES `epoch=N` —
-    * idempotent, no re-append, no double-incremented retry counts
-    * (StreamingSpec's replayed-trigger case pins this). Epochs below the
-    * one a trigger read are unreachable by any replay and are garbage-
-    * collected. Rows still pending when the stream stops remain in the
-    * store for the next run.
+    * `pendingPath` overrides it) is an [[EpochStore]], so a replayed
+    * trigger never re-appends or double-increments retry counts. Rows
+    * still pending when the stream stops remain in the store for the
+    * next run.
     */
   def captureToDlqWithRetry(
       stream: DataFrame,
@@ -230,53 +214,19 @@ object StreamErrorHandling {
       pendingPath: String = null): StreamingQuery = {
     val pPath = Option(pendingPath).getOrElse(s"$checkpointPath/graft-pending")
     val captured = capture(stream, results, input)
-    captured.df.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processRetryTrigger(batch.toDF(), batchId, captured.resultNames,
-          results, input, description, valuesPath, dlqPath, pPath,
-          classifier, maxRetries, backoffMs, now = System.currentTimeMillis())
-      }
-      .start()
-  }
-
-  /** Epoch ids present in the pending store, ascending. */
-  private[graft] def pendingEpochs(spark: SparkSession, pendingPath: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(pendingPath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq
-      .filter(_.isDirectory)
-      .flatMap(st => st.getPath.getName match {
-        case n if n.startsWith("epoch=") => scala.util.Try(n.drop(6).toLong).toOption
-        case _ => None
-      })
-      .sorted
-  }
-
-  /** The pending rows a trigger with this `batchId` must consume: the
-    * newest epoch strictly below it (a replayed trigger's own crashed
-    * `epoch=batchId` write is thereby invisible to itself). None when
-    * the store has no prior epoch or the epoch dir holds no rows.
-    */
-  private[graft] def readPendingBefore(spark: SparkSession, pendingPath: String,
-      batchId: Long): Option[(Long, DataFrame)] =
-    pendingEpochs(spark, pendingPath).filter(_ < batchId).lastOption.flatMap { m =>
-      // an all-pending-retried trigger writes an empty dir (no parquet
-      // footer) — read it as "nothing pending", same as no dir at all
-      try Some(m -> spark.read.parquet(s"$pendingPath/epoch=$m"))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    EpochStore.run(captured.df, checkpointPath) { (batch, batchId) =>
+      processRetryTrigger(batch, batchId, captured.resultNames,
+        results, input, description, valuesPath, dlqPath, pPath,
+        classifier, maxRetries, backoffMs, now = System.currentTimeMillis())
     }
+  }
 
   /** Operational/test view: the current (latest-epoch) pending rows. */
   def readPending(spark: SparkSession, pendingPath: String): Option[DataFrame] =
-    readPendingBefore(spark, pendingPath, Long.MaxValue).map(_._2)
+    EpochStore(pendingPath).latest(spark)
 
-  /** One trigger of the retry loop, factored out of foreachBatch so the
-    * crash-replay contract is testable deterministically (`now` is
-    * injected; calling this twice with the same `batchId` must be
-    * idempotent).
-    */
+  /** One trigger of the retry loop (`now` is injected so a replay is
+    * testable deterministically). */
   private[graft] def processRetryTrigger(
       batch: DataFrame, batchId: Long,
       resultNames: Seq[String],
@@ -284,7 +234,7 @@ object StreamErrorHandling {
       valuesPath: String, dlqPath: String, pendingPath: String,
       classifier: ErrorClassifier, maxRetries: Int, backoffMs: Long,
       now: Long): Unit = {
-    val spark = batch.sparkSession
+    val pending = EpochStore(pendingPath)
     def deadLetterize(errRows: DataFrame, desc: String): DataFrame =
       errRows.select(
         input.cast("string").as("input_value"),
@@ -297,9 +247,9 @@ object StreamErrorHandling {
         lit(null).cast("timestamp").as("input_timestamp"))
     // no localCheckpoint pin needed: this trigger writes epoch=batchId
     // and never touches the epoch it reads
-    val readBack = readPendingBefore(spark, pendingPath, batchId)
-    val due = readBack.map(_._2.filter(col(NextAttemptTsCol) <= now))
-    val notDue = readBack.map(_._2.filter(col(NextAttemptTsCol) > now))
+    val readBack = pending.before(batch.sparkSession, batchId)
+    val due = readBack.map(_.filter(col(NextAttemptTsCol) <= now))
+    val notDue = readBack.map(_.filter(col(NextAttemptTsCol) > now))
     // arriving rows enter at retry_count 0; due rows re-run the user
     // computation carrying their count. ONE persisted pass feeds the
     // three writes below — the user expression runs once per row per
@@ -331,18 +281,7 @@ object StreamErrorHandling {
         case None => retryable
         case Some(nd) => nd.unionByName(retryable)
       }
-      newPending.write.mode("overwrite").parquet(s"$pendingPath/epoch=$batchId")
-      // GC: of the epochs below batchId only the NEWEST is reachable (a
-      // replay of batchId re-reads exactly that one, never older) —
-      // collect the rest, including dirs stranded behind empty epochs
-      val prior = pendingEpochs(spark, pendingPath).filter(_ < batchId)
-      if (prior.size > 1) {
-        val p = new org.apache.hadoop.fs.Path(pendingPath)
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        prior.dropRight(1).foreach { e =>
-          fs.delete(new org.apache.hadoop.fs.Path(p, s"epoch=$e"), true); ()
-        }
-      }
+      pending.write(newPending, batchId)
     } finally { cachedAll.unpersist(); () }
     ()
   }
@@ -384,33 +323,27 @@ object StreamErrorHandling {
     * republishes. After `maxAttempts` a row gives up and lands
     * null-enriched WITH its attempt count visible — never silently
     * dropped, which is the failure mode this operator exists to
-    * prevent. Values are written append-per-epoch-dir (idempotent on
-    * replay); the pending store follows the retry-store crash
-    * contract.
+    * prevent. The pending store is an [[EpochStore]].
     */
   def enrichWithPendingRetry(stream: DataFrame, dimPath: String,
       keys: Seq[String], maxAttempts: Int, valuesPath: String,
       pendingPath: String, checkpointPath: String): StreamingQuery = {
     require(maxAttempts >= 1, s"maxAttempts must be >= 1: $maxAttempts")
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processEnrichRetryTrigger(batch.toDF(), batchId, dimPath, keys,
-          maxAttempts, valuesPath, pendingPath)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processEnrichRetryTrigger(batch, batchId, dimPath, keys,
+        maxAttempts, valuesPath, pendingPath)
+    }
   }
 
   private[graft] def processEnrichRetryTrigger(batch: DataFrame,
       batchId: Long, dimPath: String, keys: Seq[String], maxAttempts: Int,
       valuesPath: String, pendingPath: String): Unit = {
     val spark = batch.sparkSession
+    val pending = EpochStore(pendingPath)
     val dim = spark.read.parquet(dimPath).withColumn("__hit", lit(true))
     val incoming = batch.withColumn("__attempts", lit(0))
-    val all = readPendingBefore(spark, pendingPath, batchId) match {
-      case Some((_, pending)) => incoming.unionByName(pending)
-      case None => incoming
-    }
+    val all = pending.before(spark, batchId)
+      .map(incoming.unionByName(_)).getOrElse(incoming)
     val joined = all.join(broadcast(dim), keys, "left_outer").localCheckpoint()
     val dimCols = dim.columns.filterNot(c => keys.contains(c) || c == "__hit")
     // matched: enriched rows out, bookkeeping stripped
@@ -423,44 +356,40 @@ object StreamErrorHandling {
     missed.filter(col("__attempts") >= maxAttempts)
       .drop("__hit").withColumnRenamed("__attempts", "attempts")
       .write.mode("overwrite").parquet(s"$valuesPath/batch_id=${batchId}_exhausted")
-    // still pending: original shape + attempt count, epoch-keyed
-    missed.filter(col("__attempts") < maxAttempts)
-      .drop("__hit").drop(dimCols: _*)
-      .write.mode("overwrite").parquet(s"$pendingPath/epoch=$batchId")
+    // still pending: original shape + attempt count
+    pending.write(missed.filter(col("__attempts") < maxAttempts)
+      .drop("__hit").drop(dimCols: _*), batchId)
   }
 
   /** Late-data quarantine (ST18): rows a watermarked stateful operator
     * would silently DROP are preserved in a DLQ-style store instead.
     * Spark's drop happens invisibly inside the stateful operator, so
     * this maintains the watermark's twin itself — the same formula the
-    * engine uses (running max event time minus the delay), epoch-keyed
-    * like every graft stream state. Per trigger: rows older than the
+    * engine uses (running max event time minus the delay), kept in an
+    * [[EpochStore]]. Per trigger: rows older than the
     * PRIOR trigger's watermark (exactly those the engine considers
     * late) go to `latePath` with their lateness in ms; on-time rows go
     * to `valuesPath`; the watermark state advances to
-    * max(prior, max(ts) − delay). Crash replay rewrites both batch
-    * dirs and recomputes against the prior epoch — idempotent.
+    * max(prior, max(ts) − delay).
     */
   def quarantineLate(stream: DataFrame, tsCol: String, delayMs: Long,
       valuesPath: String, latePath: String, statePath: String,
       checkpointPath: String): StreamingQuery = {
     require(delayMs >= 0, s"watermark delay must be >= 0 ms: $delayMs")
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processLateQuarantineTrigger(batch.toDF(), batchId, tsCol,
-          delayMs, valuesPath, latePath, statePath)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processLateQuarantineTrigger(batch, batchId, tsCol,
+        delayMs, valuesPath, latePath, statePath)
+    }
   }
 
   private[graft] def processLateQuarantineTrigger(batch: DataFrame,
       batchId: Long, tsCol: String, delayMs: Long, valuesPath: String,
       latePath: String, statePath: String): Unit = {
     val spark = batch.sparkSession
+    val state = EpochStore(statePath)
     val tsMs = expr(s"unix_micros(`$tsCol`) div 1000")
-    val priorWm: Long = readPendingBefore(spark, statePath, batchId)
-      .map(_._2.select(max(col("wm_ms"))).head.getLong(0))
+    val priorWm: Long = state.before(spark, batchId)
+      .map(_.select(max(col("wm_ms"))).head.getLong(0))
       .getOrElse(Long.MinValue)
     val stamped = batch.withColumn("__ms", tsMs).localCheckpoint()
     stamped.filter(col("__ms") >= priorWm).drop("__ms")
@@ -476,8 +405,7 @@ object StreamErrorHandling {
       if (batchMax.isNullAt(0)) Long.MinValue
       else batchMax.getLong(0) - delayMs)
     import spark.implicits._
-    Seq(newWm).toDF("wm_ms").coalesce(1)
-      .write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
+    state.write(Seq(newWm).toDF("wm_ms").coalesce(1), batchId)
   }
 
   /** Unbounded-horizon streaming dedup via an accumulating Bloom state
@@ -490,60 +418,37 @@ object StreamErrorHandling {
     * some genuinely-new rows. Per trigger: exact in-batch dedup →
     * probe the prior filter (broadcast bytes, mapPartitions — the
     * bloomPrefilter pattern) → write survivors → OR the survivors'
-    * filter into the state. The state blob is epoch-keyed (crash
-    * replay rewrites; Bloom OR is idempotent anyway). `expectedItems`
-    * must stay constant across the query's life — merge requires
-    * equal-sized filters.
+    * filter into the state. The state blob is `epoch=N/bloom.bin` in an
+    * [[EpochStore]], one per trigger (blob epochs are never collected).
+    * `expectedItems` must stay constant across the query's life — merge
+    * requires equal-sized filters.
     */
   def dedupStreamingBloom(stream: DataFrame, keyCol: String,
       expectedItems: Long, fpp: Double, valuesPath: String,
       statePath: String, checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processBloomDedupTrigger(batch.toDF(), batchId, keyCol,
-          expectedItems, fpp, valuesPath, statePath)
-      }
-      .start()
-
-  private def bloomEpochs(statePath: String): Seq[(Long, java.nio.file.Path)] = {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(statePath)
-    if (!java.nio.file.Files.exists(root)) Seq.empty
-    else {
-      val s = java.nio.file.Files.list(root)
-      try s.iterator().asScala.toSeq
-        .filter(_.getFileName.toString.startsWith("epoch="))
-        .map(p => (p.getFileName.toString.stripPrefix("epoch=").toLong,
-          p.resolve("bloom.bin")))
-        .sortBy(_._1)
-      finally s.close()
-    }
-  }
-
-  private[graft] def readBloomBefore(statePath: String, batchId: Long)
-      : Option[org.apache.spark.util.sketch.BloomFilter] =
-    bloomEpochs(statePath).filter(_._1 < batchId).lastOption.map { case (_, p) =>
-      org.apache.spark.util.sketch.BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(java.nio.file.Files.readAllBytes(p)))
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processBloomDedupTrigger(batch, batchId, keyCol,
+        expectedItems, fpp, valuesPath, statePath)
     }
 
   private[graft] def processBloomDedupTrigger(batch: DataFrame, batchId: Long,
       keyCol: String, expectedItems: Long, fpp: Double,
       valuesPath: String, statePath: String): Unit = {
+    import org.apache.spark.util.sketch.BloomFilter
     val spark = batch.sparkSession
+    val state = EpochStore(statePath)
     val inBatch = batch.dropDuplicates(keyCol) // exact within the trigger
-    val prior = readBloomBefore(statePath, batchId)
-    val fresh = prior match {
+    val priorBytes = state.bytesBefore(spark, batchId, "bloom.bin")
+    val prior = priorBytes.map(b =>
+      BloomFilter.readFrom(new java.io.ByteArrayInputStream(b)))
+    val fresh = priorBytes match {
       case None => inBatch
-      case Some(bf) =>
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        val bytes = spark.sparkContext.broadcast(bos.toByteArray)
+      case Some(b) =>
+        val bytes = spark.sparkContext.broadcast(b)
         val idx = inBatch.schema.fieldIndex(keyCol)
         val schema = inBatch.schema
         inBatch.mapPartitions { it =>
-          val local = org.apache.spark.util.sketch.BloomFilter.readFrom(
+          val local = BloomFilter.readFrom(
             new java.io.ByteArrayInputStream(bytes.value))
           // null keys never dedup (the sketch can't hold them): they
           // pass through rather than silently vanishing at the probe
@@ -562,14 +467,11 @@ object StreamErrorHandling {
       case (Some(p), Some(n)) => p.mergeInPlace(n); p
       case (Some(p), None) => p
       case (None, Some(n)) => n
-      case (None, None) =>
-        org.apache.spark.util.sketch.BloomFilter.create(expectedItems, fpp)
+      case (None, None) => BloomFilter.create(expectedItems, fpp)
     }
-    val dir = java.nio.file.Paths.get(s"$statePath/epoch=$batchId")
-    java.nio.file.Files.createDirectories(dir)
     val bos = new java.io.ByteArrayOutputStream()
     merged.writeTo(bos)
-    java.nio.file.Files.write(dir.resolve("bloom.bin"), bos.toByteArray)
+    state.writeBytes(spark, bos.toByteArray, batchId, "bloom.bin")
   }
 
   /** Gap-based sessionization — the streaming twin of the batch q26
@@ -667,33 +569,23 @@ object StreamErrorHandling {
     * finalized windows flow through the custom TopKPerKey operator
     * per trigger, so the stored result is the exact per-window top-k
     * (bounded heaps, never a window sort; per-key state in the agg is
-    * watermark-bounded). batch_id=N idempotent-overwrite layout.
+    * watermark-bounded). Append is the runner's default output mode.
     */
   def trendingToSink(stream: DataFrame, tsCol: String, windowDur: String,
       watermarkDelay: String, keyCol: String, k: Int,
       outPath: String, checkpointPath: String): StreamingQuery =
-    stream.withWatermark(tsCol, watermarkDelay)
-      .groupBy(window(col(tsCol), windowDur), col(keyCol))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").cast("string").as("window_start"),
-        col(keyCol), col("n"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.TopK.perKey(batch.toDF(), Seq("window_start"),
-            Seq(graft.operators.TopK.desc("n"), graft.operators.TopK.asc(keyCol)), k)
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-        ()
-      }
-      .start()
+    EpochStore.run(windowedCounts(stream, tsCol, windowDur, watermarkDelay,
+        keyCol), checkpointPath) { (batch, batchId) =>
+      graft.operators.TopK.perKey(batch, Seq("window_start"),
+          Seq(graft.operators.TopK.desc("n"), graft.operators.TopK.asc(keyCol)), k)
+        .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
+    }
 
   /** Streaming data-contract gate: per trigger, rows passing every
     * expectation rule land in the values sink, violators land in the
     * DLQ in the exact DeadLetter shape with the failed rule list as
     * the cause message (Pipeline.quarantineToDeadLetters) — contract
-    * breaks and thrown errors share one streaming DLQ store. Same
-    * exactly-once layout as [[captureToDlq]]: each micro-batch owns
-    * its batch_id=N partition dir, crash replay overwrites it.
+    * breaks and thrown errors share one streaming DLQ store.
     */
   def contractToDlq(
       stream: DataFrame,
@@ -703,37 +595,29 @@ object StreamErrorHandling {
       valuesPath: String,
       dlqPath: String,
       checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // one flagged scan feeds both sinks
-        val flagged = graft.operators.Pipeline
-          .expectations(batch.toDF(), rules).persist()
-        try {
-          val okCols = rules.map { case (n, _) => s"ok_$n" } :+ "quarantined"
-          flagged.filter(!col("quarantined"))
-            .drop(okCols: _*)
-            .write.mode("overwrite").parquet(s"$valuesPath/batch_id=$batchId")
-          graft.operators.Pipeline
-            .quarantineToDeadLetters(flagged.drop(okCols: _*), rules,
-              input, description)
-            .write.mode("overwrite").parquet(s"$dlqPath/batch_id=$batchId")
-        } finally { flagged.unpersist(); () }
-        ()
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      // one flagged scan feeds both sinks
+      val flagged = graft.operators.Pipeline.expectations(batch, rules).persist()
+      try {
+        val okCols = rules.map { case (n, _) => s"ok_$n" } :+ "quarantined"
+        flagged.filter(!col("quarantined"))
+          .drop(okCols: _*)
+          .write.mode("overwrite").parquet(s"$valuesPath/batch_id=$batchId")
+        graft.operators.Pipeline
+          .quarantineToDeadLetters(flagged.drop(okCols: _*), rules,
+            input, description)
+          .write.mode("overwrite").parquet(s"$dlqPath/batch_id=$batchId")
+      } finally { flagged.unpersist(); () }
+      ()
+    }
 
-  /** One trigger of the streaming contamination gate — the body shared
-    * by [[contaminationGate]]'s foreachBatch and the replay proof
-    * (StoreReplayPropertySpec): the batch's docs split on the
-    * [[graft.operators.Pipeline.contaminationAgainstGrams]] verdict,
+  /** One trigger of the streaming contamination gate: the batch's docs
+    * split on the [[graft.operators.Pipeline.contaminationAgainstGrams]]
+    * verdict,
     * contaminated docs (with their shared-gram count) to the flagged
-    * store, the rest to the clean store. Same epoch-keyed accounting
-    * as the ST14 contract gate: each micro-batch OWNS its batch_id=N
-    * partition dir and crash replay overwrites it — exactly-once
-    * without a transactional sink. One persisted verdict frame feeds
-    * both sinks (the ErrorFrame.annotated discipline: never plan the
-    * gram pipeline once per branch).
+    * store, the rest to the clean store. One persisted verdict frame
+    * feeds both sinks (the ErrorFrame.annotated discipline: never plan
+    * the gram pipeline once per branch).
     */
   def processContaminationTrigger(batch: DataFrame, batchId: Long,
       evalGrams: DataFrame, n: Int, cleanPath: String, flaggedPath: String,
@@ -750,12 +634,23 @@ object StreamErrorHandling {
     ()
   }
 
-  /** One trigger of the ST35 DSIR gate — factored out so the spec can
-    * drive it batch-for-batch. Per-row scoring only (the nano-long
-    * fold, no aggregate/state); ONE pass per trigger: the scored frame
-    * is pinned, then split by the threshold into kept/rejected stores.
-    * Overwrite-by-batch_id: a crash-replayed trigger rewrites its own
-    * partition, never re-appends (the e12/epoch-store discipline).
+  /** The quality gates' one kept/rejected split: the scored frame is
+    * pinned (ONE scoring pass feeds both sinks), then rows whose
+    * `verdict` is TRUE go to kept and FALSE or NULL to rejected — a row
+    * the gate cannot judge is rejected, never lost from both sinks.
+    */
+  private def splitByVerdict(scored: DataFrame, verdict: Column,
+      batchId: Long, keptPath: String, rejectedPath: String): Unit = {
+    val pinned = scored.localCheckpoint()
+    val keep = coalesce(verdict, lit(false))
+    pinned.filter(keep)
+      .write.mode("overwrite").parquet(s"$keptPath/batch_id=$batchId")
+    pinned.filter(!keep)
+      .write.mode("overwrite").parquet(s"$rejectedPath/batch_id=$batchId")
+  }
+
+  /** One trigger of the ST35 DSIR gate. Per-row scoring only (the
+    * nano-long fold, no aggregate/state), split by the threshold.
     */
   def processDsirTrigger(batch: DataFrame, batchId: Long,
       modelNanos: Map[String, Long], minLogWeight: Double,
@@ -763,14 +658,8 @@ object StreamErrorHandling {
       textCol: String = "text", hexChars: Int = 2): Unit = {
     val (nTok, lw) = graft.operators.Pipeline
       .dsirRowScore(col(textCol), modelNanos, hexChars)
-    val scored = batch.withColumn("n_tokens", nTok)
-      .withColumn("log_weight", lw).localCheckpoint()
-    scored.filter(col("log_weight") >= lit(minLogWeight))
-      .write.mode("overwrite").parquet(s"$keptPath/batch_id=$batchId")
-    scored.filter(col("log_weight") < lit(minLogWeight)
-        || col("log_weight").isNull)
-      .write.mode("overwrite").parquet(s"$rejectedPath/batch_id=$batchId")
-    ()
+    splitByVerdict(batch.withColumn("n_tokens", nTok).withColumn("log_weight", lw),
+      col("log_weight") >= lit(minLogWeight), batchId, keptPath, rejectedPath)
   }
 
   /** Streaming DSIR quality gate (ST35): the p25 importance scorer as
@@ -789,13 +678,10 @@ object StreamErrorHandling {
       minLogWeight: Double, keptPath: String, rejectedPath: String,
       checkpointPath: String, textCol: String = "text",
       hexChars: Int = 2): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processDsirTrigger(batch.toDF(), batchId, modelNanos, minLogWeight,
-          keptPath, rejectedPath, textCol, hexChars)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processDsirTrigger(batch, batchId, modelNanos, minLogWeight,
+        keptPath, rejectedPath, textCol, hexChars)
+    }
 
   /** One trigger of the ST36 classifier gate (the ST35 shape with the
     * trained logistic model instead of the DSIR bucket LMs).
@@ -803,36 +689,24 @@ object StreamErrorHandling {
   def processClassifierTrigger(batch: DataFrame, batchId: Long,
       model: graft.operators.TextAnalysis.QualityModel, minScore: Double,
       keptPath: String, rejectedPath: String,
-      textCol: String = "text"): Unit = {
-    val scored = batch.withColumn("quality_score",
-      graft.operators.TextAnalysis.qualityScore(col(textCol), model))
-      .localCheckpoint()
-    scored.filter(col("quality_score") >= lit(minScore))
-      .write.mode("overwrite").parquet(s"$keptPath/batch_id=$batchId")
-    scored.filter(col("quality_score") < lit(minScore)
-        || col("quality_score").isNull)
-      .write.mode("overwrite").parquet(s"$rejectedPath/batch_id=$batchId")
-    ()
-  }
+      textCol: String = "text"): Unit =
+    splitByVerdict(batch.withColumn("quality_score",
+        graft.operators.TextAnalysis.qualityScore(col(textCol), model)),
+      col("quality_score") >= lit(minScore), batchId, keptPath, rejectedPath)
 
   /** One trigger of the ST38 Gopher-rule gate: the per-row integer
     * verdict (bit-equal to batch t38's `keep` — all-integer rules have
-    * no score threshold to drift), kept/rejected overwrite by batch_id.
+    * no score threshold to drift). A NULL text makes the verdict NULL
+    * under ANSI, so such a doc is rejected.
     */
   def processGopherTrigger(batch: DataFrame, batchId: Long,
       minWords: Long, maxWords: Long, stopwords: Seq[String],
       keptPath: String, rejectedPath: String,
-      textCol: String = "text"): Unit = {
-    val flagged = batch.withColumn("gopher_keep",
-      graft.operators.TextAnalysis.gopherKeepRow(col(textCol), minWords,
-        maxWords, stopwords))
-      .localCheckpoint()
-    flagged.filter(col("gopher_keep"))
-      .write.mode("overwrite").parquet(s"$keptPath/batch_id=$batchId")
-    flagged.filter(!col("gopher_keep"))
-      .write.mode("overwrite").parquet(s"$rejectedPath/batch_id=$batchId")
-    ()
-  }
+      textCol: String = "text"): Unit =
+    splitByVerdict(batch.withColumn("gopher_keep",
+        graft.operators.TextAnalysis.gopherKeepRow(col(textCol), minWords,
+          maxWords, stopwords)),
+      col("gopher_keep"), batchId, keptPath, rejectedPath)
 
   /** Streaming Gopher-rule quality gate (ST38): t38's live face — the
     * published heuristic gate applied AT INGEST. Rules are exact
@@ -840,42 +714,33 @@ object StreamErrorHandling {
     * ([[graft.operators.TextAnalysis.gopherKeepRow]]), so the stream
     * verdict is BIT-EQUAL to batch [[graft.operators.TextAnalysis
     * .gopherQualityFlags]] on the same documents — no model, no
-    * state, no shuffle; kept/rejected overwrite by batch_id (the
-    * family crash contract).
+    * state, no shuffle.
     */
   def gopherGate(stream: DataFrame, keptPath: String,
       rejectedPath: String, checkpointPath: String,
       minWords: Long = 50L, maxWords: Long = 100000L,
       stopwords: Seq[String] = graft.operators.TextAnalysis.GopherStopwords,
       textCol: String = "text"): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processGopherTrigger(batch.toDF(), batchId, minWords, maxWords,
-          stopwords, keptPath, rejectedPath, textCol)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processGopherTrigger(batch, batchId, minWords, maxWords,
+        stopwords, keptPath, rejectedPath, textCol)
+    }
 
   /** Streaming trained-classifier quality gate (ST36): t34's live face
     * — the model trains batch-side (`trainQualityModel`, 10 doubles)
     * and every arriving document scores per-row through the HOF
     * feature folds, bit-equal to batch scoring of the same document
     * (the folds derive the identical feature integers — spec-pinned).
-    * No shuffle, no state, nothing grows with the stream; kept/rejected
-    * stores overwrite by batch_id, so a crash-replayed trigger rewrites
-    * rather than re-appends.
+    * No shuffle, no state, nothing grows with the stream.
     */
   def classifierGate(stream: DataFrame,
       model: graft.operators.TextAnalysis.QualityModel, minScore: Double,
       keptPath: String, rejectedPath: String, checkpointPath: String,
       textCol: String = "text"): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processClassifierTrigger(batch.toDF(), batchId, model, minScore,
-          keptPath, rejectedPath, textCol)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processClassifierTrigger(batch, batchId, model, minScore,
+        keptPath, rejectedPath, textCol)
+    }
 
   /** Streaming benchmark-contamination gate (ST30): a live ingest
     * pipeline checks every arriving document against the eval suite's
@@ -893,13 +758,10 @@ object StreamErrorHandling {
       textCol: String = "text", idCol: String = "doc_id"): StreamingQuery = {
     val grams = graft.operators.Pipeline
       .evalGramSet(evalSet, n, textCol, idCol).localCheckpoint()
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processContaminationTrigger(batch.toDF(), batchId, grams, n,
-          cleanPath, flaggedPath, textCol, idCol)
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processContaminationTrigger(batch, batchId, grams, n,
+        cleanPath, flaggedPath, textCol, idCol)
+    }
   }
 
   /** Stream-static enrichment (slowly-changing dimension): every
@@ -908,21 +770,22 @@ object StreamErrorHandling {
     * dim rebuild) enriches subsequent batches with the new attributes;
     * plain parquet static DataFrames cache their file listing at plan
     * time and would keep serving the old snapshot (or break on an
-    * overwrite), which is why the read lives inside foreachBatch. The
+    * overwrite), which is why the read lives inside the trigger. The
     * dim is broadcast: enrichment is map-side, the stream never
     * shuffles. Left-outer keeps unmatched events (dims lag facts).
     */
   def enrichToSink(stream: DataFrame, dimPath: String, keys: Seq[String],
       valuesPath: String, checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val dim = batch.sparkSession.read.parquet(dimPath)
-        batch.join(broadcast(dim), keys, "left_outer")
-          .write.mode("append").parquet(valuesPath)
-        ()
-      }
-      .start()
+    EpochStore.run(stream, checkpointPath) { (batch, batchId) =>
+      processEnrichTrigger(batch, batchId, dimPath, keys, valuesPath)
+    }
+
+  private[graft] def processEnrichTrigger(batch: DataFrame, batchId: Long,
+      dimPath: String, keys: Seq[String], valuesPath: String): Unit = {
+    val dim = batch.sparkSession.read.parquet(dimPath)
+    batch.join(broadcast(dim), keys, "left_outer")
+      .write.mode("overwrite").parquet(s"$valuesPath/batch_id=$batchId")
+  }
 
   /** State for [[funnelDetect]]: the running min signup time plus the
     * compressed purchase-time set — every purchase at or before the

@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.BinaryType
   * or re-merges.
   *
   * Each member contributes only (deterministic batch for trigger i,
-  * run, canonical snapshot); the property loop — one clean store, then
+  * run, canonical snapshot, its EpochStore dirs); the property loop —
+  * one clean store, then
   * one store per replay point r with trigger r doubled, snapshots
   * compared — is inherited. A new store member joins the proof by
   * adding one Member row. The per-member replay tests in StreamingSpec
@@ -26,7 +27,9 @@ import org.apache.spark.sql.types.BinaryType
   *
   * The comparison runs across independent store builds, so it also
   * pins full-run determinism of every trigger fold — the sorted-fold /
-  * order-independent-merge discipline the operators document.
+  * order-independent-merge discipline the operators document. A second
+  * property over the same builds bounds storage: every state dir keeps
+  * at most 2 epochs (EpochStore's collection of unreachable epochs).
   */
 class StoreReplayPropertySpec extends SparkSpec {
   import spark.implicits._
@@ -36,7 +39,8 @@ class StoreReplayPropertySpec extends SparkSpec {
       nTriggers: Int,
       batch: Int => DataFrame,
       run: (DataFrame, Long, String) => Unit,
-      snap: String => Seq[String])
+      snap: String => Seq[String],
+      stateDirs: Seq[String]) // EpochStore dirs under the run root
 
   /** Value-canonical rows: binary columns hex-ed (Row.toString of a
     * byte array prints the identity hash, not the value), rows sorted.
@@ -72,27 +76,31 @@ class StoreReplayPropertySpec extends SparkSpec {
         i => (0 until 20).map(j => (s"k${(i * 7 + j) % 5}", (i * 13 + j).toLong))
           .toDF("k", "x"),
         (b, id, rt) => A.processTrigger(b, id, Seq("k"), Seq("x"), s"$rt/state"),
-        rt => latestState(s"$rt/state")),
+        rt => latestState(s"$rt/state"),
+        Seq("state")),
       Member("maintainCompactedLog (ST11)", 3,
         i => (0 until 12).map(j => (s"k${j % 4}", (i * 10 + j).toLong,
           (i * 100 + j).toLong, s"p$i-$j")).toDF("k", "ver", "id", "payload"),
         (b, id, rt) => A.processCompactTrigger(b, id, Seq("k"),
           Seq("ver", "id"), Seq("payload"), s"$rt/state"),
-        rt => latestState(s"$rt/state")),
+        rt => latestState(s"$rt/state"),
+        Seq("state")),
       Member("maintainCompactedLogCdc (ST16)", 3,
         i => (0 until 12).map(j => (s"k${j % 4}", (i * 10 + j).toLong,
           (i * 100 + j).toLong, s"p$i-$j")).toDF("k", "ver", "id", "payload"),
         (b, id, rt) => A.processCdcTrigger(b, id, Seq("k"),
           Seq("ver", "id"), Seq("payload"), s"$rt/state", s"$rt/cdc"),
         rt => tagged("state" -> latestState(s"$rt/state"),
-          "cdc" -> canonPath(s"$rt/cdc"))),
+          "cdc" -> canonPath(s"$rt/cdc")),
+        Seq("state")),
       Member("maintainScd2 (ST20)", 3,
         i => (0 until 10).map(j => ((j % 3).toLong, s"v${(i + j) % 4}",
           (i * 100 + j * 7).toLong, (i * 100 + j).toLong))
           .toDF("k", "v", "ts", "tie"),
         (b, id, rt) => A.processScd2Trigger(b, id, Seq("k"), Seq("v"),
           "ts", "tie", s"$rt/state"),
-        rt => latestState(s"$rt/state")),
+        rt => latestState(s"$rt/state"),
+        Seq("state")),
       Member("detectAnomalies (ST10)", 3,
         i => (0 until 30).map(j => (s"k${j % 3}",
           ((i * 31 + j * 17) % 100).toDouble + (if (j == 7) 500.0 else 0.0)))
@@ -100,25 +108,29 @@ class StoreReplayPropertySpec extends SparkSpec {
         (b, id, rt) => A.processAnomalyTrigger(b, id, Seq("k"), "v",
           k = 3, minPrior = 1, s"$rt/state", s"$rt/out"),
         rt => tagged("state" -> latestState(s"$rt/state"),
-          "out" -> canonPath(s"$rt/out"))),
+          "out" -> canonPath(s"$rt/out")),
+        Seq("state")),
       Member("maintainSlidingDistinct (ST24)", 3,
         i => (for { d <- 0L to 4L; u <- 0 until 25 }
           yield (d + i, s"u${(u * 3 + d + i * 11) % 40}")).toDF("day", "uid"),
         (b, id, rt) => A.processSlidingDistinctTrigger(b, id, "day", "uid",
           s"$rt/state", lgK = 12),
-        rt => latestState(s"$rt/state")),
+        rt => latestState(s"$rt/state"),
+        Seq("state")),
       Member("maintainQuantileSketch (ST25)", 3,
         i => (0 until 200).map(j => (s"g${j % 2}",
           ((j * 2654435761L + i * 97) % 10000).toDouble / 100.0)).toDF("g", "v"),
         (b, id, rt) => A.processQuantileTrigger(b, id, "g", "v",
           relativeError = 0.01, s"$rt/state"),
-        rt => latestState(s"$rt/state")),
+        rt => latestState(s"$rt/state"),
+        Seq("state")),
       Member("maintainFreqSketch (ST27)", 3,
         i => (0 until 150).map(j => (s"g${j % 2}", s"t${(j * 7 + i) % 30}"))
           .toDF("g", "v"),
         (b, id, rt) => A.processFreqTrigger(b, id, "g", "v", s"$rt/state",
           eps = 0.01, confidence = 0.99, seed = 42),
-        rt => latestState(s"$rt/state")),
+        rt => latestState(s"$rt/state"),
+        Seq("state")),
       Member("clusterOnWrite (ST26)", 4,
         i => (i * 40 until (i + 1) * 40).map { j =>
           val z = (j * 2654435761L) % 4096
@@ -129,7 +141,8 @@ class StoreReplayPropertySpec extends SparkSpec {
         rt => tagged(
           "rows" -> canon(graft.sources.Layout.readClustered(spark, rt)),
           "consumed" -> graft.sources.Layout.consumedBatches(spark, rt)
-            .toSeq.sorted)),
+            .toSeq.sorted),
+        Nil),
       Member("captureToDlqWithRetry pending store (ST6)", 3,
         i => (Seq(s"${i + 1}", s"${i * 10 + 2}") ++
           (if (i < 2) Seq(s"bad-$i") else Nil)).toDF("s"),
@@ -155,7 +168,7 @@ class StoreReplayPropertySpec extends SparkSpec {
             // stack frames re-render per capture scan (CLAUDE.md):
             // normalize the cause struct to its stable class+message
             "\\[\\[.*\\]\\]", "[cause]"))),
-        ),
+        Seq("pending")),
       Member("enrichWithPendingRetry pending store (ST19)", 3,
         i => Seq((1L, (i * 10 + 1).toLong), ((i + 4).toLong, (i * 10 + 2).toLong))
           .toDF("k", "fact"),
@@ -164,7 +177,8 @@ class StoreReplayPropertySpec extends SparkSpec {
         rt => tagged(
           "pending" -> E.readPending(spark, s"$rt/pending")
             .map(canon).getOrElse(Nil),
-          "values" -> canonPath(s"$rt/values"))),
+          "values" -> canonPath(s"$rt/values")),
+        Seq("pending")),
       Member("quarantineLate watermark store (ST18)", 3,
         i => (0 until 10).map { j =>
           val ms = (i * 50 + j * 13 - (if (j == 4) 200 else 0)).toLong.max(0L)
@@ -174,7 +188,8 @@ class StoreReplayPropertySpec extends SparkSpec {
           delayMs = 20L, s"$rt/values", s"$rt/late", s"$rt/state"),
         rt => tagged("state" -> latestState(s"$rt/state"),
           "values" -> canonPath(s"$rt/values"),
-          "late" -> canonPath(s"$rt/late"))),
+          "late" -> canonPath(s"$rt/late")),
+        Seq("state")),
       Member("maintainLshDedup (ST29)", 3,
         i => (0 until 6).map { j =>
           ((i * 10 + j).toLong, (0 until 12)
@@ -186,7 +201,8 @@ class StoreReplayPropertySpec extends SparkSpec {
         rt => tagged(
           "bands" -> latestState(s"$rt/state/bands"),
           "docs" -> latestState(s"$rt/state/docs"),
-          "pairs" -> canonPath(s"$rt/pairs"))),
+          "pairs" -> canonPath(s"$rt/pairs")),
+        Seq("state/bands", "state/docs")),
       Member("maintainKnnGraph (ST32)", 3,
         i => (0 until 6).map { j =>
           val id = (i * 10 + j).toLong
@@ -198,7 +214,8 @@ class StoreReplayPropertySpec extends SparkSpec {
         rt => tagged(
           "vectors" -> latestState(s"$rt/state/vectors"),
           "within" -> latestState(s"$rt/state/within"),
-          "graph" -> canonPath(s"$rt/graph"))),
+          "graph" -> canonPath(s"$rt/graph")),
+        Seq("state/vectors", "state/within")),
       Member("maintainBm25 (ST33)", 3,
         i => (0 until 6).map { j =>
           val text = (0 until 10)
@@ -209,13 +226,16 @@ class StoreReplayPropertySpec extends SparkSpec {
           Seq((0L, "w0"), (0L, "w3"), (1L, "w7")).toDF("qid", "term"),
           3, 1.2, 0.75, s"$rt/state", s"$rt/scores"),
         rt => tagged("state" -> latestState(s"$rt/state"),
-          "scores" -> canonPath(s"$rt/scores"))),
+          "scores" -> canonPath(s"$rt/scores")),
+        Seq("state")),
       Member("dedupStreamingBloom (ST17)", 3,
         i => (0 until 40).map(j => (s"k${(i * 20 + j * 3) % 70}", j.toLong))
           .toDF("k", "x"),
         (b, id, rt) => E.processBloomDedupTrigger(b, id, "k",
           expectedItems = 10000L, fpp = 0.01, s"$rt/values", s"$rt/state"),
-        rt => tagged("values" -> canonPath(s"$rt/values"))),
+        rt => tagged("values" -> canonPath(s"$rt/values")),
+        // its blob epochs are kept on purpose (EpochStore.writeBytes)
+        Nil),
       Member("maintainExactSubstr (ST31)", 3,
         i => (0 until 5).map { j =>
           val run = (1 to 8).map(x => s"r$x").mkString(" ")
@@ -227,7 +247,8 @@ class StoreReplayPropertySpec extends SparkSpec {
         (b, id, rt) => A.processExactSubstrTrigger(b, id, 3, 4,
           s"$rt/state", s"$rt/values"),
         rt => tagged("state" -> latestState(s"$rt/state"),
-          "values" -> canonPath(s"$rt/values"))),
+          "values" -> canonPath(s"$rt/values")),
+        Seq("state")),
       Member("maintainChiSquare (ST39)", 3,
         i => (0 until 10).map { j =>
           (s"a${(i + j) % 2}", s"b${j % 3}")
@@ -235,7 +256,8 @@ class StoreReplayPropertySpec extends SparkSpec {
         (b, id, rt) => A.processChiSquareTrigger(b, id, "a", "b",
           s"$rt/state", s"$rt/stats"),
         rt => tagged("state" -> latestState(s"$rt/state"),
-          "stats" -> canonPath(s"$rt/stats"))),
+          "stats" -> canonPath(s"$rt/stats")),
+        Seq("state")),
       Member("maintainDomainCap (ST37)", 3,
         i => (0 until 6).map { j =>
           ((i * 10 + j).toLong, s"s${j % 2}", s"txt$i$j")
@@ -244,7 +266,8 @@ class StoreReplayPropertySpec extends SparkSpec {
           s"$rt/state", s"$rt/values", s"$rt/rejected"),
         rt => tagged("state" -> latestState(s"$rt/state"),
           "values" -> canonPath(s"$rt/values"),
-          "rejected" -> canonPath(s"$rt/rejected"))),
+          "rejected" -> canonPath(s"$rt/rejected")),
+        Seq("state")),
       Member("maintainBurstEvents (ST34)", 3,
         i => (0 until 12).map { j =>
           // repeats across triggers: the (user, ts) distinct must
@@ -252,7 +275,8 @@ class StoreReplayPropertySpec extends SparkSpec {
           ((j % 3).toLong, (i * 5 + j).toLong * 1000000000L)
         }.toDF("user_id", "ts"),
         (b, id, rt) => A.processBurstTrigger(b, id, s"$rt/state"),
-        rt => latestState(s"$rt/state")),
+        rt => latestState(s"$rt/state"),
+        Seq("state")),
       Member("contaminationGate (ST30)", 3,
         i => (0 until 8).map { j =>
           val text =
@@ -265,26 +289,54 @@ class StoreReplayPropertySpec extends SparkSpec {
             Seq((0L, "alpha beta gamma")).toDF("doc_id", "text"), 2),
           n = 2, s"$rt/clean", s"$rt/flagged"),
         rt => tagged("clean" -> canonPath(s"$rt/clean"),
-          "flagged" -> canonPath(s"$rt/flagged"))))
+          "flagged" -> canonPath(s"$rt/flagged")),
+        Nil),
+      Member("enrichToSink (ST13)", 3,
+        i => Seq((1L, (i * 10 + 1).toLong), ((i + 2).toLong, (i * 10 + 2).toLong))
+          .toDF("k", "fact"),
+        (b, id, rt) => E.processEnrichTrigger(b, id, sharedDim, Seq("k"),
+          s"$rt/values"),
+        rt => canonPath(s"$rt/values"),
+        Nil))
+  }
+
+  /** Per member: the clean run root, then one root per replay point r
+    * (trigger r fired twice). Both properties read the same builds. */
+  private lazy val builds: Seq[(Member, String, Seq[String])] = members.map { m =>
+    def build(replayAt: Int): String = {
+      val rt = Files.createTempDirectory(s"graft-replay-prop").toString
+      for (i <- 0 until m.nTriggers) {
+        m.run(m.batch(i), i.toLong, rt)
+        if (i == replayAt) m.run(m.batch(i), i.toLong, rt) // the crash
+      }
+      rt
+    }
+    (m, build(replayAt = -1), (0 until m.nTriggers).map(build))
   }
 
   test("epoch-keyed store family: replaying ANY trigger leaves every store unchanged") {
-    members.foreach { m =>
-      def build(replayAt: Int): Seq[String] = {
-        val rt = Files.createTempDirectory(s"graft-replay-prop").toString
-        for (i <- 0 until m.nTriggers) {
-          m.run(m.batch(i), i.toLong, rt)
-          if (i == replayAt) m.run(m.batch(i), i.toLong, rt) // the crash
-        }
-        m.snap(rt)
-      }
-      val clean = build(replayAt = -1)
+    builds.foreach { case (m, cleanRoot, replayRoots) =>
+      val clean = m.snap(cleanRoot)
       assert(clean.nonEmpty, s"${m.name}: empty snapshot — property is vacuous")
-      for (r <- 0 until m.nTriggers) {
-        val replayed = build(r)
+      replayRoots.zipWithIndex.foreach { case (rt, r) =>
+        val replayed = m.snap(rt)
         assert(replayed == clean,
           s"${m.name}: replaying trigger $r changed the store\n" +
             s"clean:    ${clean.mkString(" | ")}\nreplayed: ${replayed.mkString(" | ")}")
+      }
+    }
+  }
+
+  test("epoch-keyed store family: after any replayed build a state dir holds at most 2 epochs") {
+    // storage is bounded by 2 × state size, never triggers × state size
+    builds.foreach { case (m, _, replayRoots) =>
+      for ((rt, r) <- replayRoots.zipWithIndex; dir <- m.stateDirs) {
+        val epochs = Option(new java.io.File(s"$rt/$dir").listFiles()).toSeq
+          .flatten.filter(f => f.isDirectory && f.getName.startsWith("epoch="))
+          .map(_.getName).sorted
+        assert(epochs.nonEmpty, s"${m.name}: no epoch under $dir — vacuous")
+        assert(epochs.size <= 2,
+          s"${m.name}: replay at $r left ${epochs.mkString(", ")} under $dir")
       }
     }
   }

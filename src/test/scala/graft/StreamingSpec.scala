@@ -160,6 +160,22 @@ class StreamingSpec extends SparkSpec {
       spark.read.parquet(s"$tmp/rejected").count() == 4L)
   }
 
+  test("gopherGate (ST38): a NULL-text doc lands in rejected, never in neither store") {
+    // under ANSI size(split(NULL)) is NULL, so the verdict is NULL: it
+    // must fail into rejected rather than pass neither filter
+    val tmp = Files.createTempDirectory("graft-gopher-null").toString
+    val good = ((1 to 50).map(i => s"word$i") ++ Seq("the", "of", "with"))
+      .mkString(" ")
+    StreamErrorHandling.processGopherTrigger(
+      Seq((1L, Option(good)), (2L, Option.empty[String])).toDF("doc_id", "text"),
+      batchId = 0L, 50L, 100000L, graft.operators.TextAnalysis.GopherStopwords,
+      s"$tmp/kept", s"$tmp/rejected")
+    def ids(p: String): Set[Long] =
+      spark.read.parquet(p).select($"doc_id").as[Long].collect().toSet
+    assert(ids(s"$tmp/kept") == Set(1L))
+    assert(ids(s"$tmp/rejected") == Set(2L))
+  }
+
   test("contaminationGate (ST30): per-trigger verdicts equal the batch p4 verdict") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, String)]
@@ -568,7 +584,7 @@ class StreamingSpec extends SparkSpec {
       .as[(String, Long)].collect().toSeq.sorted
     assert(vals == Seq(("1", 1L), ("2", 2L)))
     // epoch GC: batch 1's second run leaves at most epochs {0, 1}
-    assert(StreamErrorHandling.pendingEpochs(spark, pPath).toSet.subsetOf(Set(0L, 1L)))
+    assert(graft.streaming.EpochStore(pPath).epochs(spark).toSet.subsetOf(Set(0L, 1L)))
   }
 
   test("intervalJoin matches rights within the time bound only") {
